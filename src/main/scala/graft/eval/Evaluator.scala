@@ -40,27 +40,14 @@ class DetectionEvaluator(
   /** Assemble the evaluation result table (detection_evaluator.py:584-616):
     * one row per groundtruth (confidence of its matched prediction, else 0)
     * + one row per unmatched prediction (FP). Carries `category_id` for
-    * grouping. Two broadcast-sized joins against the match table. */
-  def results(model: String, categoryAgnostic: Boolean = false): DataFrame = {
-    val m = matches(model, 0.0, categoryAgnostic).toDF()
-    val conf = predictions(model)
-      .select(col("id").as("prediction_id"), col("confidence").cast("double"))
-    val gtRows = m.filter(col("groundtruth_id").isNotNull)
-      .join(conf, Seq("prediction_id"), "left")
-      .select(
-        col("image_id"), col("category_id"),
-        lit(true).as("groundtruth"),
-        col("iou"),
-        coalesce(col("confidence"), lit(0.0)).as("confidence"))
-    val fpRows = m.filter(col("groundtruth_id").isNull && col("prediction_id").isNotNull)
-      .join(conf, Seq("prediction_id"), "left")
-      .select(
-        col("image_id"), col("category_id"),
-        lit(false).as("groundtruth"),
-        col("iou"),
-        coalesce(col("confidence"), lit(0.0)).as("confidence"))
-    gtRows.unionByName(fpRows)
-  }
+    * grouping. A projection of the cached match table: the matcher already
+    * carries each row's confidence, so the prediction frame is not read
+    * again. */
+  def results(model: String, categoryAgnostic: Boolean = false): DataFrame =
+    matches(model, 0.0, categoryAgnostic).toDF().select(
+      col("image_id"), col("category_id"),
+      col("groundtruth_id").isNotNull.as("groundtruth"),
+      col("iou"), col("confidence"))
 
   /** PR curves + AP per category (compute_precision_recall,
     * detection_evaluator.py:382-682) for one model.
@@ -96,7 +83,7 @@ class DetectionEvaluator(
       .limit(1).count()
     require(orphan == 0, s"'$model': prediction image_id not in images")
     // a duplicated prediction id fans out every id-keyed join in the
-    // results assembly (measured: one dup id → 2×2 phantom unmatched
+    // grouped results assembly (measured: one dup id → 2×2 phantom unmatched
     // rows) — fail loudly, like assert_ids_well_formed does for datasets
     val dup = p.agg(count(lit(1)).as("n"),
       countDistinct(col("id")).as("d")).head()
@@ -125,8 +112,6 @@ class DetectionEvaluator(
       : (DataFrame, DataFrame) = {
     import graft.operators.Grouper
     val m = matches(model, 0.0, categoryAgnostic = false).toDF()
-    val conf = predictions(model)
-      .select(col("id").as("prediction_id"), col("confidence").cast("double"))
     // continuous-group bin edges are computed ONCE over the COMBINED
     // gt+prediction values (reference bins the assembled results frame,
     // detection_evaluator.py:620) — independent per-table edges would give
@@ -149,16 +134,12 @@ class DetectionEvaluator(
     def pick(df: DataFrame, idAlias: String) =
       df.select((col("id").as(idAlias) +: groupCols.map(c => col(s"`$c`"))): _*)
     val gtRows = m.filter(col("groundtruth_id").isNotNull)
-      .join(conf, Seq("prediction_id"), "left")
       .join(pick(gtResolved, "groundtruth_id"), Seq("groundtruth_id"))
-      .select((Seq(lit(true).as("groundtruth"), col("iou"),
-        coalesce(col("confidence"), lit(0.0)).as("confidence")) ++
+      .select((Seq(lit(true).as("groundtruth"), col("iou"), col("confidence")) ++
         groupCols.map(c => col(s"`$c`"))): _*)
     val fpRows = m.filter(col("groundtruth_id").isNull && col("prediction_id").isNotNull)
-      .join(conf, Seq("prediction_id"), "left")
       .join(pick(predResolved, "prediction_id"), Seq("prediction_id"))
-      .select((Seq(lit(false).as("groundtruth"), col("iou"),
-        coalesce(col("confidence"), lit(0.0)).as("confidence")) ++
+      .select((Seq(lit(false).as("groundtruth"), col("iou"), col("confidence")) ++
         groupCols.map(c => col(s"`$c`"))): _*)
     val results = gtRows.unionByName(fpRows)
     val pr = PrCurve.compute(results, groupCols, minIou, reindexBins,

@@ -10,10 +10,13 @@ case class EvalBox(
     confidence: Double, groundtruth: Boolean)
 
 /** One matcher output row: every prediction appears exactly once (matched or
-  * not), plus one row per unmatched groundtruth. */
+  * not), plus one row per unmatched groundtruth. `confidence` is the
+  * prediction's own confidence, 0.0 on a missed groundtruth row — the
+  * evaluator's result table is a projection of these rows. */
 case class MatchRow(
     image_id: Long, category_id: Int,
-    prediction_id: Option[Long], groundtruth_id: Option[Long], iou: Double)
+    prediction_id: Option[Long], groundtruth_id: Option[Long], iou: Double,
+    confidence: Double = 0.0)
 
 /** Greedy confidence-ordered bipartite matching — the evaluation core.
   *
@@ -120,7 +123,7 @@ object Matching {
       MatchRow(imageId, categoryId,
         Some(preds(i).id),
         if (predMatch(i) >= 0) Some(gts(predMatch(i)).id) else None,
-        predIou(i))
+        predIou(i), preds(i).confidence)
     }
     val fnRows = (0 until m).iterator.collect {
       case j if gtMatch(j) < 0 =>

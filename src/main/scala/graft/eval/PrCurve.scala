@@ -1,17 +1,18 @@
 package graft.eval
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 
 /** One compressed curve bin entering the per-group kernel: the aggregate of
   * all result rows of one evaluation group at one distinct confidence value.
   * `tp` = rows counting as true positives (groundtruth & iou > minIou),
   * `n` = all rows, `gt` = groundtruth rows (any iou). */
-case class CurveBin(key: String, confidence: Double, tp: Long, n: Long, gt: Long)
+case class CurveBin(confidence: Double, tp: Long, n: Long, gt: Long)
 
 /** One PR-curve point. */
-case class PrPoint(key: String, precision: Double, recall: Double,
+case class PrPoint(precision: Double, recall: Double,
     confidence_threshold: Double, f1_score: Double)
 
 /** PR-curve / AP computation — faithful re-implementation of the reference
@@ -37,7 +38,7 @@ object PrCurve {
     * confidence-desc order reproduce the reference's per-row sweep.
     * `reindexBins` = recall bins (e.g. 101 points 0..1) or None for exact
     * curve points. */
-  private[eval] def curvePoints(key: String, bins0: Iterator[CurveBin],
+  private[eval] def curvePoints(bins0: Iterator[CurveBin],
       reindexBins: Option[Array[Double]]): Iterator[PrPoint] = {
     val bins = bins0.toArray.sortBy(b => -b.confidence)
     if (bins.isEmpty) return Iterator.empty
@@ -72,7 +73,7 @@ object PrCurve {
     // fillna(0) for the no-target NaN recall case
     var pts = precision.indices.map { i =>
       val r = if (recall(i).isNaN) 0.0 else recall(i)
-      PrPoint(key, precision(i), r, conf(i), f1(precision(i), r))
+      PrPoint(precision(i), r, conf(i), f1(precision(i), r))
     }.toVector
 
     // drop collinear points: constant precision, then constant recall
@@ -105,8 +106,8 @@ object PrCurve {
           while (j + 1 < dedup.length && dedup(j + 1).recall <= b) j += 1
           if (j >= 0) {
             val p = dedup(j)
-            PrPoint(key, p.precision, b, p.confidence_threshold, p.f1_score)
-          } else PrPoint(key, 0.0, b, 0.0, 0.0)
+            PrPoint(p.precision, b, p.confidence_threshold, p.f1_score)
+          } else PrPoint(0.0, b, 0.0, 0.0)
         }
     }
   }
@@ -116,8 +117,11 @@ object PrCurve {
 
   /** Compute PR curves per group. `results` must carry `groundtruth`
     * (boolean), `iou`, `confidence` plus the group columns. The group key is
-    * string-concatenated for the typed kernel and re-joined to the original
-    * group columns afterwards (distinct group table is small).
+    * string-concatenated for the kernel; the group columns ride through the
+    * (key, confidence) aggregate as extra grouping columns (the key is a
+    * function of them, so the groups do not change) and the kernel copies
+    * them onto its points — `results` is read once, and no group table is
+    * joined back.
     *
     * SCALE BOUND (named, per stage): the only per-group-serial work is the
     * finishing kernel and the AP window, and BOTH are bounded by the number
@@ -136,37 +140,52 @@ object PrCurve {
   def compute(results: DataFrame, groupCols: Seq[String], minIou: Double = 0.0,
       reindexBins: Option[Array[Double]] = Some(defaultBins),
       confidenceDecimals: Option[Int] = None): DataFrame = {
-    val spark = results.sparkSession
-    import spark.implicits._
     val sep = "\u0001" // non-printable separator so distinct tuples never collapse
     // coalesce each value: concat_ws SKIPS nulls, which would collapse
     // (null, "a") and ("a", null) into the same key
     val keyCol = concat_ws(sep, groupCols.map(c =>
       coalesce(col(s"`$c`").cast("string"), lit("\u0000null"))): _*)
+    // group columns ride along under positional names, so a group named
+    // like a bin column (`confidence`, `key`, …) cannot collide
+    val groups = groupCols.indices.map(i => s"__g$i")
     // distributed distinct-confidence compression: one row out per
     // (group, confidence) — partial aggregation makes this scale with data
     // size rather than with the number of evaluation groups
     val bins = results
-      .select(
+      .select((Seq(
         keyCol.as("key"),
         col("groundtruth").cast("boolean").as("groundtruth"),
         col("iou").cast("double").as("iou"),
         confidenceDecimals.foldLeft(col("confidence").cast("double"))(
-          (c, d) => round(c, d)).as("confidence"))
-      .groupBy(col("key"), col("confidence"))
+          (c, d) => round(c, d)).as("confidence")) ++
+        groupCols.zip(groups).map { case (c, g) => col(s"`$c`").as(g) }): _*)
+      .groupBy(("key" +: "confidence" +: groups).map(col): _*)
       .agg(
         sum(when(col("groundtruth") && col("iou") > lit(minIou), 1L).otherwise(0L)).as("tp"),
         count(lit(1)).as("n"),
         sum(when(col("groundtruth"), 1L).otherwise(0L)).as("gt"))
-      .as[CurveBin]
-    val curves = bins.groupByKey(_.key)
-      .flatMapGroups((k, it) => curvePoints(k, it, reindexBins))
-      .toDF()
-    val groupTable = results.select(
-      (groupCols.map(c => col(s"`$c`")) :+ keyCol.as("key")): _*).distinct()
-    curves.join(broadcast(groupTable), Seq("key"))
-      .drop("key")
-      .withColumn("iou_threshold", lit(minIou))
+    // bin row = key, confidence, group values…, tp, n, gt
+    val nGroups = groupCols.length
+    val outSchema = StructType(Seq("precision", "recall",
+      "confidence_threshold", "f1_score").map(StructField(_, DoubleType, nullable = false)) ++
+      groupCols.zip(bins.schema.fields.slice(2, 2 + nGroups)).map {
+        case (c, f) => f.copy(name = c) })
+    val curves = bins.groupByKey(_.getString(0))(Encoders.STRING)
+      .flatMapGroups { (_, it) =>
+        val rows = it.toArray
+        // a key holds one group tuple unless two tuples stringify alike;
+        // then, as for one tuple, its curve runs over the summed bins and
+        // is emitted once per tuple
+        val merged = rows.groupMapReduce(_.getDouble(1))(r =>
+          (r.getLong(2 + nGroups), r.getLong(3 + nGroups), r.getLong(4 + nGroups)))(
+          (x, y) => (x._1 + y._1, x._2 + y._2, x._3 + y._3))
+        val pts = curvePoints(merged.iterator.map { case (c, (tp, n, gt)) =>
+          CurveBin(c, tp, n, gt) }, reindexBins).toArray
+        rows.iterator.map(r => r.toSeq.slice(2, 2 + nGroups)).distinct
+          .flatMap(g => pts.iterator.map(p => Row.fromSeq(Seq(p.precision,
+            p.recall, p.confidence_threshold, p.f1_score) ++ g)))
+      }(Encoders.row(outSchema))
+    curves.withColumn("iou_threshold", lit(minIou))
   }
 
   /** Right-Riemann AP per group over a PR-curve frame

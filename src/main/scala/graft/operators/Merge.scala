@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * booleanized families aligned, dataset names concatenated `A+B`.
   *
   * All of it is joins + `unionByName` — no collects, distributes at any
-  * scale. The id-overlap detection and id-offset computation are two tiny
-  * aggregates.
+  * scale. The id-overlap detection and id-offset computation share one
+  * min/max aggregate over the id columns; an exact semi-join probe runs
+  * only for a pair of id ranges that overlap.
   */
 object Merge {
 
@@ -177,31 +178,50 @@ object Merge {
     }
 
   /** Shift b's image AND annotation ids past a's maxima when they collide
-    * (merge.py:199-203). Collision test + offsets = four tiny aggregates. */
+    * (merge.py:199-203). One aggregate gives all four id ranges. */
   private def shiftIfColliding(a: GraftDataset, b: GraftDataset): GraftDataset = {
-    val imgCollides = b.images.join(a.images.select("id"), Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    val annCollides = b.annotations.join(a.annotations.select("id"), Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    if (!imgCollides && !annCollides) b
-    else {
-      val imgOff = if (imgCollides) offsetPast(a.images, b.images) else 0L
-      val annOff = if (annCollides) offsetPast(a.annotations, b.annotations) else 0L
-      Ids.shiftIds(b, imgOff, annOff)
-    }
+    val Seq(aImg, bImg, aAnn, bAnn) =
+      idRanges(a.images, b.images, a.annotations, b.annotations)
+    val imgOff = offsetPast(a.images, aImg, b.images, bImg)
+    val annOff = offsetPast(a.annotations, aAnn, b.annotations, bAnn)
+    if (imgOff == 0L && annOff == 0L) b else Ids.shiftIds(b, imgOff, annOff)
   }
 
   private def shiftAnnotationsIfColliding(a: GraftDataset, b: GraftDataset): DataFrame = {
-    val collides = b.annotations.join(a.annotations.select("id"), Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    if (!collides) b.annotations
-    else b.annotations.withColumn("id", col("id") + offsetPast(a.annotations, b.annotations))
+    val Seq(l, r) = idRanges(a.annotations, b.annotations)
+    val off = offsetPast(a.annotations, l, b.annotations, r)
+    if (off == 0L) b.annotations else b.annotations.withColumn("id", col("id") + off)
   }
 
-  /** offset = max(left.id) - min(right.id) + 1 (merge.py:199-203). */
-  private def offsetPast(left: DataFrame, right: DataFrame): Long = {
-    val maxL = left.agg(max("id")).collect()(0).getLong(0)
-    val minR = right.agg(min("id")).collect()(0).getLong(0)
-    maxL - minR + 1
+  /** Inclusive `id` range of a frame that has ids. */
+  private final case class IdRange(min: Long, max: Long)
+
+  /** The `id` range of each frame (`None` for a frame without ids), from
+    * ONE aggregate over their union: one SQL execution, whatever the number
+    * of frames. */
+  private def idRanges(frames: DataFrame*): Seq[Option[IdRange]] = {
+    val ids = frames.zipWithIndex.map { case (df, i) =>
+      df.select(lit(i).as("side"), col("id").cast("long").as("id"))
+    }.reduce(_ unionByName _)
+    val bounds = frames.indices.flatMap { i =>
+      val id = when(col("side") === i, col("id"))
+      Seq(min(id), max(id))
+    }
+    val r = ids.agg(bounds.head, bounds.tail: _*).head()
+    frames.indices.map(i =>
+      if (r.isNullAt(2 * i)) None else Some(IdRange(r.getLong(2 * i), r.getLong(2 * i + 1))))
+  }
+
+  /** Offset moving right's ids past left's when they share one, else 0:
+    * offset = max(left.id) - min(right.id) + 1 (merge.py:199-203).
+    * Disjoint ranges prove there is no shared id without a join; ranges
+    * that overlap may still interleave (even vs odd ids), so the exact
+    * semi-join decides. */
+  private def offsetPast(left: DataFrame, l: Option[IdRange],
+      right: DataFrame, r: Option[IdRange]): Long = (l, r) match {
+    case (Some(x), Some(y)) if x.max >= y.min && y.max >= x.min &&
+        right.join(left.select("id"), Seq("id"), "left_semi").limit(1).count() > 0 =>
+      x.max - y.min + 1
+    case _ => 0L
   }
 }

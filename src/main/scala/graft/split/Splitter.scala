@@ -2,7 +2,7 @@ package graft.split
 
 import graft.model.GraftDataset
 import graft.operators.Grouper
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Constrained randomized splitting — reference `simple_split` / `split`
@@ -175,6 +175,88 @@ object Splitter {
     cur
   }
 
+  /** What the greedy assigner needs per atom: `atoms` = (atom, image
+    * count, pre-assignment; conflicting pre-assignments demote the atom to
+    * unassigned, disjoint_groups.py conflict policy), `hists` = the atom's
+    * balance histogram over `vocab` (atoms without annotations have none),
+    * `continuous` = the bins are one ordered continuous dimension (EMD)
+    * rather than categorical or flattened tuples (KL). */
+  private[graft] final case class AtomStats(
+      atoms: Array[(Long, Long, Option[String])],
+      hists: Map[Long, Array[Double]],
+      vocab: Array[String],
+      continuous: Boolean)
+
+  /** [[AtomStats]] from ONE collect of one row per atom: the images-side
+    * size and pre-assignments, left-joined to the atom's balance bins as an
+    * array of (group values…, count). limit(maxAtoms + 1) bounds the driver
+    * transfer BEFORE the guard check, so an over-cap dataset fails fast
+    * instead of OOMing first. */
+  private[graft] def atomStats(ds: GraftDataset, atomized: DataFrame,
+      keepBalanced: Seq[Grouper.GroupSpec], maxAtoms: Int): AtomStats = {
+    val sizes = atomized.groupBy("__atom").agg(
+      count(lit(1)).as("__size"),
+      collect_set(col("split")).as("__splits"))
+    val groupCols = keepBalanced.map(g => col(s"`__group_${g.name}`"))
+    val perAtom =
+      if (keepBalanced.isEmpty) sizes.withColumn("__bins", lit(null))
+      else {
+        val resolved = Grouper.resolveGroups(
+          ds.copy(images = atomized), keepBalanced)
+        // bind atom to each annotation through the image FK
+        val withAtom = resolved.join(
+          GraftDataset.broadcastIfSmall(
+            atomized.select(col("id").as("__img_id"), col("__atom"))),
+          col("image_id") === col("__img_id"))
+        val bins = withAtom.groupBy((col("__atom") +: groupCols): _*).count()
+          .groupBy(col("__atom").as("__bin_atom"))
+          .agg(collect_list(struct((groupCols :+ col("count")): _*)).as("__bins"))
+        sizes.join(bins, col("__atom") === col("__bin_atom"), "left")
+      }
+    val rows = perAtom.select("__atom", "__size", "__splits", "__bins")
+      .limit(maxAtoms + 1).collect()
+    if (rows.length > maxAtoms)
+      throw new IllegalArgumentException(
+        s"Splitter.split: more than $maxAtoms atoms — the greedy balanced " +
+          "assigner is sequential over atoms on the driver and cannot scale " +
+          "past the cap. Group images with keepSeparate columns (atoms ≪ " +
+          "images), use simpleSplit for unconstrained splits, or raise " +
+          "maxAtoms if the driver can hold it.")
+    val atoms = rows.map { r =>
+      val pre = r.getSeq[String](2).filter(_ != null)
+      (r.getLong(0), r.getLong(1), if (pre.size == 1) Some(pre.head) else None)
+    }
+    // global bin vocabulary: one slot per distinct group-value tuple, keyed
+    // by its values joined with a non-printable separator (tuples must not
+    // collapse)
+    val k = keepBalanced.length
+    val binsByAtom = rows.filterNot(_.isNullAt(3)).map { r =>
+      r.getLong(0) -> r.getSeq[Row](3).map(b =>
+        (0 until k).map(i => String.valueOf(b.get(i))).mkString("\u0001") ->
+          b.getLong(k).toDouble)
+    }
+    // EMD requires a NUMERIC bin order and only makes sense over one
+    // continuous dimension; the flattened tuple space (or any categorical
+    // dimension) uses KL over an arbitrary-but-fixed order.
+    val continuous = keepBalanced.sizeIs == 1 &&
+      keepBalanced.head.isInstanceOf[Grouper.ContinuousGroup]
+    val keys = binsByAtom.flatMap(_._2.map(_._1)).distinct
+    val vocab =
+      if (continuous)
+        keys.sortBy(k => (scala.util.Try(k.toDouble).getOrElse(
+          // IntervalLabel strings "(lo, hi]" sort by their lower bound
+          scala.util.Try(k.stripPrefix("(").takeWhile(_ != ',').toDouble)
+            .getOrElse(Double.MaxValue)), k))
+      else keys.sorted
+    val slot = vocab.zipWithIndex.toMap
+    val hists = binsByAtom.map { case (atom, bins) =>
+      val h = Array.fill(vocab.length)(0.0)
+      bins.foreach { case (key, n) => h(slot(key)) += n }
+      atom -> h
+    }.toMap
+    AtomStats(atoms, hists, vocab, continuous)
+  }
+
   /** Balanced constrained split of the images table.
     *
     * @param keepSeparate   image columns whose equal values must land in the
@@ -202,70 +284,17 @@ object Splitter {
     if (keepSeparate.isEmpty && keepBalanced.isEmpty)
       return simpleSplit(ds, seed, names, shares)
 
-    // 1. atoms over images (single atom per image when no keep-separate)
+    // 1. atoms over images (single atom per image when no keep-separate),
+    // fenced once: the stats collect and the final assignment join both
+    // read it, and neither re-derives the images lineage
     val atomized =
-      if (keepSeparate.nonEmpty) makeAtomicChunks(ds.images, keepSeparate)
-      else ds.images.withColumn("__atom", col("id").cast("long"))
+      (if (keepSeparate.nonEmpty) makeAtomicChunks(ds.images, keepSeparate)
+      else ds.images.withColumn("__atom", col("id").cast("long"))).localCheckpoint()
 
-    // 2. per-atom sizes, pre-assignments, and balance histograms.
-    // limit(maxAtoms + 1) bounds the driver transfer BEFORE the guard
-    // check, so an over-cap dataset fails fast instead of OOMing first.
-    val atomInfoRows = atomized.groupBy("__atom").agg(
-      count(lit(1)).as("__size"),
-      collect_set(col("split")).as("__splits"))
-      .limit(maxAtoms + 1).collect()
-    if (atomInfoRows.length > maxAtoms)
-      throw new IllegalArgumentException(
-        s"Splitter.split: more than $maxAtoms atoms — the greedy balanced " +
-          "assigner is sequential over atoms on the driver and cannot scale " +
-          "past the cap. Group images with keepSeparate columns (atoms ≪ " +
-          "images), use simpleSplit for unconstrained splits, or raise " +
-          "maxAtoms if the driver can hold it.")
-    val atomInfo = atomInfoRows
-      .map { r =>
-        val pre = r.getSeq[String](2).filter(_ != null)
-        // conflicting pre-assignments demote the atom to unassigned
-        // (disjoint_groups.py conflict policy)
-        (r.getLong(0), r.getLong(1), if (pre.size == 1) Some(pre.head) else None)
-      }
-
-    val (histsByAtom: Map[Long, Array[Double]], nBins: Int, binKinds: Array[Boolean]) =
-      if (keepBalanced.isEmpty) (Map.empty[Long, Array[Double]], 0, Array.empty[Boolean])
-      else {
-        val resolved = Grouper.resolveGroups(
-          ds.copy(images = atomized), keepBalanced)
-        val groupCols = keepBalanced.map(g => s"__group_${g.name}")
-        // bind atom to each annotation through the image FK
-        val withAtom = resolved.join(
-          GraftDataset.broadcastIfSmall(
-            atomized.select(col("id").as("__img_id"), col("__atom"))),
-          col("image_id") === col("__img_id"))
-        val binDf = withAtom.groupBy((col("__atom") +: groupCols.map(c => col(s"`$c`"))): _*)
-          .count()
-        val rows = binDf.collect()
-        // global bin vocabulary: one slot per distinct group-value tuple
-        val keys = rows.map(r => (1 to keepBalanced.length).map(i => String.valueOf(r.get(i))).mkString("\u0001")) // non-printable separator: tuples must not collapse
-        // EMD requires a NUMERIC bin order and only makes sense over one
-        // continuous dimension; the flattened tuple space (or any
-        // categorical dimension) uses KL over an arbitrary-but-fixed order.
-        val singleContinuous = keepBalanced.sizeIs == 1 &&
-          keepBalanced.head.isInstanceOf[Grouper.ContinuousGroup]
-        val vocab =
-          if (singleContinuous)
-            keys.distinct.sortBy(k => scala.util.Try(k.toDouble).getOrElse(
-              // IntervalLabel strings "(lo, hi]" sort by their lower bound
-              scala.util.Try(k.stripPrefix("(").takeWhile(_ != ',').toDouble)
-                .getOrElse(Double.MaxValue)))
-          else keys.distinct.sorted
-        val slot = vocab.zipWithIndex.toMap
-        val m = scala.collection.mutable.Map[Long, Array[Double]]()
-        rows.zip(keys).foreach { case (r, k) =>
-          val arr = m.getOrElseUpdate(r.getLong(0), Array.fill(vocab.length)(0.0))
-          arr(slot(k)) += r.getLong(keepBalanced.length + 1).toDouble
-        }
-        val kinds = Array.fill(vocab.length)(singleContinuous)
-        (m.toMap, vocab.length, kinds)
-      }
+    // 2. per-atom sizes, pre-assignments, and balance histograms
+    val AtomStats(atomInfo, histsByAtom, vocab, continuous) =
+      atomStats(ds, atomized, keepBalanced, maxAtoms)
+    val nBins = vocab.length
 
     // 3. driver-side greedy assignment (get_winner, dataset_splitter.py:21-129)
     val targetShares = names.zip(shares).toMap
@@ -277,7 +306,7 @@ object Splitter {
       else histsByAtom.values.foldLeft(Array.fill(nBins)(0.0)) { (a, b) =>
         var i = 0; while (i < nBins) { a(i) += b(i); i += 1 }; a
       }
-    val useEmd = binKinds.nonEmpty && binKinds.head
+    val useEmd = nBins > 0 && continuous
 
     def histCost(h: Array[Double]): Double =
       if (nBins == 0) 0.0

@@ -170,6 +170,92 @@ class EvaluatorSpec extends SparkFunSuite {
     // cat0: image0 gt_count=1; pred conf .9 → counts: t0:1, t.85:1, t1:0
     assert(ce.map(_.getAs[Double]("MAE")).toSeq == Seq(0.0, 0.0, 1.0))
   }
+
+  /** 12 images, 5 boxes each over 3 categories. Most boxes get a shifted
+    * prediction, some a second lower-confidence duplicate, and every image a
+    * far false positive: matches, misses and false positives all occur. */
+  private def crowded(): DetectionEvaluator = {
+    val images = (0L until 12L).map(i => (i, 400, 100, s"$i.jpg"))
+      .toDF("id", "width", "height", "relative_path")
+    val gtRows = for (i <- 0L until 12L; k <- 0 until 5)
+      yield (i * 10 + k, i, k % 3, k * 30.0, 0.0, 20.0, 20.0)
+    val shifted = gtRows.filter(_._1 % 4 != 0).map { case (id, i, c, x, y, w, h) =>
+      (1000 + id, i, c, x + id % 5, y, w, h, ((id * 37) % 100) / 100.0) }
+    val dups = gtRows.filter(_._1 % 7 == 0).map { case (id, i, c, x, y, w, h) =>
+      (3000 + id, i, c, x + 2, y, w, h, 0.05) }
+    val far = (0L until 12L).map(i => (5000 + i, i, (i % 3).toInt, 300.0, 50.0, 20.0, 20.0, 0.55))
+    val gt = gtRows.toDF("id", "image_id", "category_id",
+      "box_x_min", "box_y_min", "box_width", "box_height")
+    val preds = (shifted ++ dups ++ far).toDF("id", "image_id", "category_id",
+      "box_x_min", "box_y_min", "box_width", "box_height", "confidence")
+    new DetectionEvaluator(images, gt, Map("m" -> preds), Map(0 -> "a", 1 -> "b", 2 -> "c"))
+  }
+
+  /** The result table as assembled before the matcher carried confidence:
+    * the match table joined back to the prediction frame, once for the
+    * groundtruth rows and once for the false positives. */
+  private def joinedResults(ev: DetectionEvaluator, agnostic: Boolean)
+      : org.apache.spark.sql.DataFrame = {
+    val m = ev.matches("m", 0.0, agnostic).toDF().drop("confidence")
+    val conf = ev.predictions("m")
+      .select(col("id").as("prediction_id"), col("confidence").cast("double"))
+    def side(rows: org.apache.spark.sql.DataFrame, gt: Boolean) =
+      rows.join(conf, Seq("prediction_id"), "left").select(
+        col("image_id"), col("category_id"), lit(gt).as("groundtruth"),
+        col("iou"), coalesce(col("confidence"), lit(0.0)).as("confidence"))
+    side(m.filter(col("groundtruth_id").isNotNull), gt = true).unionByName(side(
+      m.filter(col("groundtruth_id").isNull && col("prediction_id").isNotNull), gt = false))
+  }
+
+  test("MatchRow.confidence: the prediction's own on a match or a false positive, 0.0 on a miss") {
+    val rows = fixture().matches("m").collect()
+    val byPred = rows.flatMap(r => r.prediction_id.map(_ -> r)).toMap
+    assert(byPred(10L).groundtruth_id.contains(0L) && byPred(10L).confidence == 0.9)
+    assert(byPred(11L).groundtruth_id.isEmpty && byPred(11L).confidence == 0.8)
+    val misses = rows.filter(_.prediction_id.isEmpty)
+    assert(misses.map(_.groundtruth_id).toSeq == Seq(Some(1L)))
+    assert(misses.forall(_.confidence == 0.0))
+    // every prediction row carries its frame's confidence, agnostic or not
+    val ev = crowded()
+    val conf = ev.predictions("m").select("id", "confidence").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    for (agnostic <- Seq(false, true); r <- ev.matches("m", 0.0, agnostic).collect())
+      assert(r.confidence == r.prediction_id.map(conf).getOrElse(0.0), r.toString)
+    // the field has a default: positional five-field rows still build
+    assert(MatchRow(0L, 0, None, Some(1L), 0.0).confidence == 0.0)
+  }
+
+  test("results() equals the two-join assembly as a multiset") {
+    for (ev <- Seq(fixture(), crowded()); agnostic <- Seq(false, true))
+      assert(collectSorted(ev.results("m", agnostic)) ==
+        collectSorted(joinedResults(ev, agnostic)))
+  }
+
+  test("precisionRecall reads the prediction frame only inside the matcher") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = java.nio.file.Files.createTempDirectory("graft-preds").toString
+    val src = crowded()
+    src.predictions("m").write.mode("overwrite").parquet(dir)
+    val ev = new DetectionEvaluator(src.images, src.groundtruth,
+      Map("m" -> spark.read.parquet(dir)), src.labelMap)
+    def readsPreds(p: LogicalPlan) = p.collectLeaves().exists {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.exists(_.toString.contains(dir))
+        case _ => false
+      }
+      case _ => false
+    }
+    val (pr, ap) = ev.precisionRecall("m", minIou = 0.5)
+    for (df <- Seq(pr, ap)) {
+      val plan = df.queryExecution.optimizedPlan
+      assert(!readsPreds(plan), s"prediction frame read outside the matcher:\n$plan")
+      val cached = plan.collect { case r: InMemoryRelation => r.cachedPlan.toString }
+      assert(cached.exists(_.contains(dir)), s"matcher input not cached:\n$plan")
+    }
+    assert(collectSorted(ap) == collectSorted(src.precisionRecall("m", minIou = 0.5)._2))
+  }
 }
 
 class GroupedPrSpec extends SparkFunSuite {

@@ -506,3 +506,84 @@ class SkewJoinSpec extends SparkFunSuite {
     assert(err.getMessage.contains("saltCols"))
   }
 }
+
+/** `Merge.union` / `Merge.merge` id-collision probes: one min/max aggregate
+  * over the id columns decides, and the exact semi-join runs only when a
+  * pair of id ranges overlaps. */
+class UnionProbeSpec extends SparkFunSuite {
+  import UnionProbeSpec.ds
+
+  private def ids(df: org.apache.spark.sql.DataFrame, c: String = "id"): Seq[Long] =
+    df.select(c).collect().map(_.getLong(0)).sorted.toSeq
+
+  test("union: id-disjoint inputs are not shifted") {
+    // how many SQL executions the probes take is locked in MergeSplitActionsSpec
+    val u = Merge.union(ds(0L to 3L, 0L to 5L), ds(100L to 103L, 100L to 105L))
+    assert(ids(u.images) == (0L to 3L) ++ (100L to 103L))
+    assert(ids(u.annotations) == (0L to 5L) ++ (100L to 105L))
+  }
+
+  test("union: interleaved id ranges without a shared id are not shifted") {
+    val a = ds(Seq(0L, 2L, 4L, 6L), Seq(0L, 2L, 4L, 6L, 8L))
+    val b = ds(Seq(1L, 3L, 5L, 7L), Seq(1L, 3L, 5L, 7L, 9L))
+    val u = Merge.union(a, b)
+    assert(ids(u.images) == (0L to 7L))
+    assert(ids(u.annotations) == (0L to 9L))
+    assert(ids(u.annotations, "image_id").toSet == (0L to 7L).toSet)
+  }
+
+  test("union: shared ids shift past the left maximum, per table") {
+    val t = tinyDataset() // images 0..3, annotations 0..5
+    val both = Merge.union(t, t)
+    // offset = max(left.id) - min(right.id) + 1: images +4, annotations +6
+    assert(ids(both.images) == (0L to 7L))
+    assert(ids(both.annotations) == (0L to 11L))
+    val shifted = both.annotations.filter(col("id") >= 6)
+      .select("id", "image_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(shifted == Map(6L -> 4L, 7L -> 4L, 8L -> 5L, 9L -> 5L, 10L -> 6L, 11L -> 6L))
+    // images collide, annotations do not: only image ids (and the FK) move
+    val a = ds(0L to 3L, 0L to 3L)
+    val b = ds(2L to 5L, 10L to 13L)
+    val u = Merge.union(a, b)
+    assert(ids(u.images) == (0L to 3L) ++ (4L to 7L)) // b's images +2
+    assert(ids(u.annotations) == (0L to 3L) ++ (10L to 13L))
+    assert(ids(u.annotations.filter(col("id") >= 10), "image_id") == (4L to 7L))
+  }
+
+  test("union: an empty side is no collision") {
+    val a = ds(0L to 3L, 0L to 5L)
+    val empty = a.copy(images = a.images.limit(0), annotations = a.annotations.limit(0))
+    for (u <- Seq(Merge.union(a, empty), Merge.union(empty, a))) {
+      assert(ids(u.images) == (0L to 3L))
+      assert(ids(u.annotations) == (0L to 5L))
+    }
+    assert(Merge.union(empty, empty).numImages == 0)
+  }
+
+  test("merge: annotation ids shift on a shared id only") {
+    val a = ds(0L to 3L, 0L to 5L)
+    val extra = (b: graft.model.GraftDataset) =>
+      b.copy(images = b.images.withColumn("camera", lit("c")))
+    val disjoint = Merge.merge(a, extra(ds(0L to 3L, Seq(10L, 11L))))
+    assert(ids(disjoint.annotations) == (0L to 5L) ++ Seq(10L, 11L))
+    val shared = Merge.merge(a, extra(ds(0L to 3L, Seq(4L, 5L))))
+    // offset = 5 - 4 + 1 = 2
+    assert(ids(shared.annotations) == (0L to 7L))
+    assert(shared.numImages == 4 && shared.images.columns.contains("camera"))
+  }
+}
+
+object UnionProbeSpec {
+  /** Images `imgIds`; annotation `annIds(i)` sits on image `imgIds(i % n)`. */
+  def ds(imgIds: Seq[Long], annIds: Seq[Long]): graft.model.GraftDataset = {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val images = imgIds.map(i => (i, 100, 100, s"$i.jpg"))
+      .toDF("id", "width", "height", "relative_path")
+    val ann = annIds.zipWithIndex.map { case (a, i) =>
+      (a, imgIds(i % imgIds.size), 0, 1.0, 1.0, 5.0, 5.0)
+    }.toDF("id", "image_id", "category_id",
+      "box_x_min", "box_y_min", "box_width", "box_height")
+    graft.model.GraftDataset.create(images, ann, Map(0 -> "x"))
+  }
+}

@@ -28,7 +28,7 @@ def scala_counts() -> dict:
 
 def test_count() -> int:
     n = 0
-    for f in (REPO / "src/test/scala/graft").glob("*.scala"):
+    for f in (REPO / "src/test/scala/graft").rglob("*.scala"):
         n += len(re.findall(r'^\s*(?:test|property)\(', f.read_text(), re.M))
     return n
 
